@@ -18,10 +18,14 @@ over the snapshot:
   row whose join marker is NULL has no source match, so the branch CASE
   dispatches on ``marker IS NULL`` — no extra join or shuffle
 
-branches UNION ALL'd, materialized to a staging table (a CTAS cannot read
-and overwrite the same table in one statement), then swapped in with
-``INSERT OVERWRITE``. The rewrite keeps the statement's own aliases so
-``ON``/``SET``/``VALUES`` expressions run verbatim.
+branches UNION ALL'd and written back with ``INSERT OVERWRITE``. The
+rewrite keeps the statement's own aliases so ``ON``/``SET``/``VALUES``
+expressions run verbatim. How it is written back depends on the path (see
+:func:`run_merge`): the partition-pruned path is one dynamic-partition
+``INSERT OVERWRITE`` that reads its own target (Spark writes it under
+``.spark-staging-*`` and swaps the partitions in after the job commits);
+the unpruned path is a static overwrite, which may not read its own
+target, so it first materializes the rewrite to a staging table.
 
 Supported grammar (the common warehouse shapes — Snowflake's MERGE plus
 the SQL-Server/Databricks ``BY SOURCE`` extension)::
@@ -52,11 +56,23 @@ aggregate counts source matches per target row and raises, mirroring
 Snowflake's nondeterministic-merge error, instead of silently fanning out
 the LEFT JOIN.
 
+Job anatomy of one pruned upsert MERGE (the daily backfill shape, 7 Spark
+jobs; AQE runs each shuffle stage as its own job):
+
+- partition columns: ``DESCRIBE TABLE`` — 0 jobs;
+- pin the source (``localCheckpoint``), its touched partitions an
+  observed metric of the same job — 1 job;
+- the duplicate-match check (:func:`_check_deterministic`) — 3 jobs;
+- the dynamic-partition ``INSERT OVERWRITE`` of the rewrite — 3 jobs;
+- only when a branch deletes: a ``DISTINCT`` probe of the rewrite for
+  touched partitions it leaves empty, and a truncating insert per such
+  partition.
+
 Scale notes: the rewrite is two joins and a union over the snapshot — the
 same shuffle shape Delta's MERGE plans under the hood (join on the merge
-key; AQE handles skew). The staging CTAS is the price of snapshot
-isolation without a transactional table format; at 100 TB you'd point the
-identical statement at a Delta/Iceberg catalog instead.
+key; AQE handles skew). The unpruned path's staging CTAS is the price of
+snapshot isolation without a transactional table format; at 100 TB you'd
+point the identical statement at a Delta/Iceberg catalog instead.
 """
 
 from __future__ import annotations
@@ -411,11 +427,13 @@ def _check_deterministic(spark, spec: MergeSpec) -> None:
         "__merge_rid", F.monotonically_increasing_id()
     ).createOrReplaceTempView(view)
     try:
+        # collect, not count: counting a LIMIT adds a single-partition
+        # exchange, and with it one more Spark job
         dup = spark.sql(
             f"SELECT 1 AS one FROM {view} AS {t} "
             f"JOIN {spec.source_sql} AS {s} ON {spec.on} "
             f"GROUP BY {t}.__merge_rid HAVING count(*) > 1 LIMIT 1"
-        ).count()
+        ).collect()
     finally:
         spark.catalog.dropTempView(view)
     if dup:
@@ -484,6 +502,29 @@ def _part_literal(v) -> str | None:
 _MAX_TOUCHED_PARTITIONS = 128
 
 
+def _partition_columns(spark, table: str) -> list[str]:
+    """The table's partition columns, from the rows after ``# Partition
+    Information`` in ``DESCRIBE TABLE``: a catalog read that runs no Spark
+    job (``spark.catalog.listColumns`` collects through
+    ``toLocalIterator``, one job per partition). [] for an unpartitioned
+    table, a view, or a name that does not resolve."""
+    try:
+        rows = spark.sql(f"DESCRIBE TABLE {table}").collect()
+    except Exception:
+        return []
+    names = [r.col_name for r in rows]
+    if "# Partition Information" not in names:
+        return []
+    out = []
+    for n in names[names.index("# Partition Information") + 1 :]:
+        if n == "# col_name":
+            continue
+        if not n or n.startswith("#"):  # the next section
+            break
+        out.append(n)
+    return out
+
+
 def _partition_pruning(spark, spec: MergeSpec):
     """Decide whether this MERGE can rewrite ONLY the target partitions the
     source actually touches (the catalog-table analog of Delta's file-level
@@ -501,22 +542,19 @@ def _partition_pruning(spark, spec: MergeSpec):
     - every INSERT assigns each partition column verbatim from the ON-
       equated source column (inserts land in touched partitions only).
 
-    Returns ``(predicate_sql, touched_rows, pcols, col_names, pin_view)``,
+    Returns ``(predicate_sql, touched_rows, pcols, pin_view)``,
     or None when pruning is ruled out BEFORE the source is pinned, or
-    ``(None, None, None, None, pin_view)`` when it's ruled out AFTER (too
+    ``(None, None, None, pin_view)`` when it's ruled out AFTER (too
     many touched partitions, NULL/unsupported partition literal) — the
     caller must then run the full rewrite against the already-pinned
     source, so the one-evaluation invariant holds on that path too and the
     pinned view never leaks unreferenced (ADVICE r6).
     """
-    try:
-        cat_cols = spark.catalog.listColumns(spec.target)
-    except Exception:
-        return None
-    pcols = [c.name for c in cat_cols if c.isPartition]
+    pcols = _partition_columns(spark, spec.target)
     if not pcols or spec.nm_by_source:
         return None
-    names = [f.name for f in spark.table(spec.target).schema.fields]
+    fields = spark.table(spec.target).schema.fields
+    names = [f.name for f in fields]
     if names[-len(pcols) :] != pcols:
         return None
     conj = _split_top_and(spec.on)
@@ -549,39 +587,38 @@ def _partition_pruning(spark, spec: MergeSpec):
             if v not in (f"{s_}.{eq[p]}", eq[p]):
                 return None
     # pin ONE evaluation of the source: the touched-partition decision and
-    # the stage rewrite must see identical data, or a nondeterministic
-    # source could emit a partition the pruning view never read and the
-    # dynamic overwrite would replace it with only the new rows (the same
-    # one-evaluation invariant VersionedTable.upsert pins)
+    # the rewrite must see identical data, or a nondeterministic source
+    # could emit a partition the pruning view never read and the dynamic
+    # overwrite would replace it with only the new rows (the same
+    # one-evaluation invariant VersionedTable.upsert pins). The touched
+    # partitions, CAST to the target's partition types, are an observed
+    # metric of that same pinning job: no probe job of their own.
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    types = {f.name: f.dataType.simpleString() for f in fields}
+    seen = Observation()
     pin_view = "__merge_src_pin_" + re.sub(r"\W", "_", spec.target)
-    spark.sql(
-        f"SELECT {s_}.* FROM {spec.source_sql} AS {s_}"
+    spark.sql(f"SELECT {s_}.* FROM {spec.source_sql} AS {s_}").observe(
+        seen,
+        F.collect_set(
+            F.struct(*(F.col(eq[p]).cast(types[p]).alias(p) for p in pcols))
+        ).alias("touched"),
     ).localCheckpoint().createOrReplaceTempView(pin_view)
-    types = {
-        f.name: f.dataType.simpleString()
-        for f in spark.table(spec.target).schema.fields
-    }
-    sel = ", ".join(
-        f"CAST({s_}.{eq[p]} AS {types[p]}) AS {p}" for p in pcols
-    )
-    touched = (
-        spark.sql(f"SELECT DISTINCT {sel} FROM {pin_view} AS {s_}")
-        .limit(_MAX_TOUCHED_PARTITIONS + 1)
-        .collect()
-    )
+    touched = seen.get["touched"]
     if len(touched) > _MAX_TOUCHED_PARTITIONS:
-        return None, None, None, None, pin_view
+        return None, None, None, pin_view
     disj = []
     for r in touched:
         lits = []
         for p in pcols:
             lit = _part_literal(r[p])
             if lit is None:  # NULL/unsupported partition value type
-                return None, None, None, None, pin_view
+                return None, None, None, pin_view
             lits.append(f"{p} = {lit}")
         disj.append("(" + " AND ".join(lits) + ")")
     pred = " OR ".join(disj) if disj else "false"
-    return pred, touched, pcols, names, pin_view
+    return pred, touched, pcols, pin_view
 
 
 def run_merge(spark, stmt: str) -> None:
@@ -598,7 +635,7 @@ def run_merge(spark, stmt: str) -> None:
     spec = parse_merge(stmt)
     decision = _partition_pruning(spark, spec)
     pruning = decision is not None and decision[0] is not None
-    pin_view = decision[4] if decision is not None else None
+    pin_view = decision[3] if decision is not None else None
     try:
         _run_merge_body(spark, spec, decision, pruning, pin_view)
     finally:
@@ -620,9 +657,8 @@ def run_merge(spark, stmt: str) -> None:
 
 
 def _run_merge_body(spark, spec, decision, pruning, pin_view) -> None:
-    view = None
     if pruning:
-        pred, touched, pcols, names, _ = decision
+        pred, touched, pcols, _ = decision
         view = "__merge_pruned_" + re.sub(r"\W", "_", spec.target)
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY VIEW {view} AS "
@@ -642,51 +678,63 @@ def _run_merge_body(spark, spec, decision, pruning, pin_view) -> None:
     schema = spark.table(spec.target).schema
     tgt_fields = [(f.name, f.dataType.simpleString()) for f in schema.fields]
     select = _rewrite(pspec, tgt_fields)
+    if pruning:
+        _overwrite_touched(spark, spec, select, tgt_fields, touched, pcols)
+        return
     stage = f"{spec.target}__merge_stage"
     spark.sql(f"DROP TABLE IF EXISTS {stage}")
     spark.sql(f"CREATE TABLE {stage} AS {select}")
     try:
-        if pruning:
-            conf = "spark.sql.sources.partitionOverwriteMode"
-            try:
-                old = spark.conf.get(conf)
-            except Exception:
-                old = None
-            spark.conf.set(conf, "dynamic")
-            try:
-                cols = ", ".join(names)
-                spark.sql(
-                    f"INSERT OVERWRITE TABLE {spec.target} "
-                    f"SELECT {cols} FROM {stage}"
-                )
-                present = {
-                    tuple(r[p] for p in pcols)
-                    for r in spark.sql(
-                        f"SELECT DISTINCT {', '.join(pcols)} FROM {stage}"
-                    ).collect()
-                }
-                data_cols = ", ".join(n for n in names if n not in pcols)
-                for r in touched:
-                    if tuple(r[p] for p in pcols) in present:
-                        continue
-                    part = ", ".join(
-                        f"{p} = {_part_literal(r[p])}" for p in pcols
-                    )
-                    spark.sql(
-                        f"INSERT OVERWRITE TABLE {spec.target} "
-                        f"PARTITION ({part}) "
-                        f"SELECT {data_cols} FROM {stage} WHERE false"
-                    )
-            finally:
-                if old is None:
-                    spark.conf.unset(conf)
-                else:
-                    spark.conf.set(conf, old)
-        else:
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {spec.target} SELECT * FROM {stage}"
-            )
+        spark.sql(
+            f"INSERT OVERWRITE TABLE {spec.target} SELECT * FROM {stage}"
+        )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
         # pin/pruned temp view cleanup lives in run_merge's outer finally,
         # which also covers failures raised before this point
+
+
+def _overwrite_touched(spark, spec, select, tgt_fields, touched, pcols) -> None:
+    """Write the pruned rewrite back in ONE dynamic-partition ``INSERT
+    OVERWRITE`` that reads its own target: Spark stages the output under
+    ``.spark-staging-*`` and replaces exactly the partitions present in it
+    once the job commits, so a failing job leaves every partition as it
+    was. A touched partition the rewrite empties is absent from the output;
+    only a deleting branch can empty one, so only then does a probe —
+    reading the rewrite BEFORE the write, while the source is pinned and
+    the target unchanged — find those partitions to truncate."""
+    emptied = []
+    if any(b.delete for b in spec.matched):
+        present = {
+            tuple(r)
+            for r in spark.sql(
+                f"SELECT DISTINCT {', '.join(pcols)} FROM ({select})"
+            ).collect()
+        }
+        emptied = [r for r in touched if tuple(r) not in present]
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    try:
+        old = spark.conf.get(conf)
+    except Exception:
+        old = None
+    spark.conf.set(conf, "dynamic")
+    try:
+        spark.sql(
+            f"INSERT OVERWRITE TABLE {spec.target} SELECT * FROM ({select})"
+        )
+        nulls = ", ".join(
+            f"CAST(NULL AS {typ}) AS {c}"
+            for c, typ in tgt_fields
+            if c not in pcols
+        )
+        for r in emptied:
+            part = ", ".join(f"{p} = {_part_literal(r[p])}" for p in pcols)
+            spark.sql(
+                f"INSERT OVERWRITE TABLE {spec.target} PARTITION ({part}) "
+                f"SELECT {nulls} WHERE false"
+            )
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)

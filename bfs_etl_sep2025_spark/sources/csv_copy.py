@@ -151,6 +151,15 @@ class CsvCopyTask(Task):
         return f"{self.schema}.{self.table}" if self.schema else self.table
 
     def execute(self, ctx: RunContext) -> None:
+        from bfs_etl_sep2025_spark.plans.locks import table_write_lock
+
+        # the ledger read, the insert and the record form one critical
+        # section per table: two copies of one file into one table (a
+        # parallel Pipeline run) must not both see it unloaded
+        with table_write_lock(self._qualified()):
+            self._copy(ctx)
+
+    def _copy(self, ctx: RunContext) -> None:
         from pyspark.sql import functions as F
 
         from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
@@ -167,7 +176,7 @@ class CsvCopyTask(Task):
         ledger = (
             LoadLedger(spark, self.ledger_path) if self.ledger_path else None
         )
-        already = ledger.loaded_files(self._qualified()) if ledger else set()
+        already = ledger.loaded_files(target) if ledger else set()
         todo = [n for n in names if n not in already]
         self.skipped = [n for n in names if n in already]
         self.loaded = []
@@ -201,10 +210,7 @@ class CsvCopyTask(Task):
         # column order so a mid-schema audit column can't silently land data
         # in the wrong columns (ADVICE r01) — withColumn appended it last.
         df = df.select([f.name for f in target_schema.fields if f.name in df.columns])
-        from bfs_etl_sep2025_spark.plans.locks import table_write_lock
-
-        with table_write_lock(self._qualified()):
-            df.write.insertInto(target, overwrite=False)
+        df.write.insertInto(target, overwrite=False)
         if ledger:
-            ledger.record(self._qualified(), todo, now)
+            ledger.record(target, todo, now)
         self.loaded = todo

@@ -268,7 +268,11 @@ def run_stream_merge_upsert(
 
     Scale notes: each micro-batch costs the MERGE's two joins over the
     target snapshot (the no-transactional-format price; see
-    ``plans/merge.py``); the stream's own state is file-tracking only.
+    ``plans/merge.py``). A partitioned target whose ON clause equates every
+    partition column reads and rewrites only the partitions the batch
+    touches, in one dynamic-partition overwrite with no staging table;
+    any other target is rewritten whole through a staging table. The
+    stream's own state is file-tracking only.
     ``target`` is taken for lock serialization via the statement head, so
     concurrent same-table writers queue (``plans/locks.py``).
     """

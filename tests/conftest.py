@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import duckdb
 import pandas as pd
@@ -41,6 +44,28 @@ def spark(tmp_path_factory):
         },
     )
     yield spark
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs a block launches: the block runs in its own job
+    group (AQE's query-stage jobs inherit it), and ``.n`` is read once the
+    listener bus has delivered every job event. Usage::
+
+        with spark_jobs(spark) as jobs:
+            ...
+        assert jobs.n <= 9
+    """
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    out = SimpleNamespace(n=None)
+    sc.setJobGroup(group, group)
+    try:
+        yield out
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

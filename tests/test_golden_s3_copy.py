@@ -218,3 +218,38 @@ def test_mid_schema_audit_column_lands_by_name(spark, stage, tmp_path_factory):
     # typed columns carry data, not shifted neighbors
     assert df.filter(F.col("quantity").isNull()).count() == 0
     assert df.filter(F.col("trans_ts").isNull()).count() == 0
+
+
+def test_parallel_copies_of_one_file_load_it_once(spark, stage, tmp_path_factory):
+    """Two COPY INTO tasks naming the same file and table, run side by side
+    by a parallel Pipeline, land its rows once: the ledger read, the insert
+    and the record sit under one per-table lock."""
+    ledger = str(tmp_path_factory.mktemp("ledger_par") / "ingest_ledger")
+    spark.sql("CREATE DATABASE IF NOT EXISTS dev_db")
+    spark.sql("DROP TABLE IF EXISTS dev_db.prestg_trans_par")
+    spark.sql(
+        """
+        CREATE TABLE dev_db.prestg_trans_par (
+          trans_id BIGINT, product_id BIGINT, customer_id BIGINT,
+          quantity INT, unit_price DOUBLE, trans_ts TIMESTAMP_NTZ,
+          channel STRING, load_utc_ts TIMESTAMP_NTZ
+        ) USING parquet
+        """
+    )
+    with Pipeline("s3_parallel_copies", clock=lambda: FROZEN) as p:
+        tasks = [
+            CsvCopyTask(
+                f"copy_{k}",
+                table="prestg_trans_par",
+                schema="dev_db",
+                stage_path=str(stage),
+                files=["product_order_trans_07132022.csv"],
+                file_format=FILE_FORMAT,
+                ledger_path=ledger,
+            )
+            for k in ("a", "b")
+        ]
+    p.run(spark, run_date=datetime(2022, 7, 13, 7), parallelism=2)
+    assert spark.table("dev_db.prestg_trans_par").count() == ROWS_PER_DAY["07132022"]
+    assert sorted(len(t.loaded) for t in tasks) == [0, 1]
+    assert sorted(len(t.skipped) for t in tasks) == [0, 1]

@@ -566,15 +566,18 @@ def test_parse_merge_by_source_roundtrip(tgt, salias, key, cols, gval):
 # -- partition-pruned MERGE path ---------------------------------------------
 
 
-def _part_files(spark, table, part):
-    import os
-
-    loc = (
+def _table_dir(spark, table):
+    return (
         spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
         .filter("col_name = 'Location'")
         .first()["data_type"]
     ).replace("file:", "")
-    d = os.path.join(loc, part)
+
+
+def _part_files(spark, table, part):
+    import os
+
+    d = os.path.join(_table_dir(spark, table), part)
     return sorted(os.listdir(d)) if os.path.isdir(d) else []
 
 
@@ -927,3 +930,142 @@ def test_null_partition_value_bails_to_full_rewrite(spark):
         if v.name.startswith("__merge_")
     ] == []
     spark.sql("DROP TABLE IF EXISTS pm_null")
+
+
+# -- job budget and failure atomicity of the single-write pruned path ---------
+
+#: Spark jobs one pruned upsert MERGE ran on the fixture below when its
+#: write-back was a staging CTAS plus a copy-back and its partition columns
+#: came from ``spark.catalog.listColumns``
+_STAGED_UPSERT_JOBS = 17
+
+
+def _daily_fact(spark, table):
+    """A fact table partitioned by DATE, like a daily backfill's: 1,500
+    rows over two recent days, one row on an older day no source below
+    touches."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(
+        f"CREATE TABLE {table} (id BIGINT, v STRING, n INT, d DATE) "
+        "USING parquet PARTITIONED BY (d)"
+    )
+    spark.sql(
+        f"INSERT INTO {table} SELECT id, CAST(id AS STRING), 0, "
+        "DATE'2022-07-13' + CAST(id % 2 AS INT) FROM range(1500)"
+    )
+    spark.sql(f"INSERT INTO {table} VALUES (-1, 'old', 0, DATE'2022-07-01')")
+
+
+_DAILY_UPSERT = """
+MERGE INTO {t} AS t USING {s} AS s ON t.id = s.id AND t.d = s.d
+WHEN MATCHED THEN UPDATE SET v = s.v, n = t.n + 1
+WHEN NOT MATCHED THEN INSERT (id, v, n, d) VALUES (s.id, s.v, 0, s.d)"""
+
+
+def test_pruned_merge_job_budget(spark, tmp_path, monkeypatch):
+    """A pruned upsert MERGE runs at most half the jobs of the staged write
+    it replaced, reads partition columns without ``listColumns``, and the
+    COPY INTO load ledger runs no Spark job at all."""
+    from pyspark.sql.catalog import Catalog
+
+    from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
+    from tests.conftest import spark_jobs
+
+    def no_list_columns(*a, **k):
+        raise AssertionError("listColumns runs Spark jobs")
+
+    monkeypatch.setattr(Catalog, "listColumns", no_list_columns)
+    _daily_fact(spark, "jb_fact")
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW jb_src AS "
+        "SELECT id + 700 AS id, 'x' AS v, "
+        "DATE'2022-07-13' + CAST((id + 700) % 2 AS INT) AS d FROM range(1500)"
+    )
+    untouched = _part_files(spark, "jb_fact", "d=2022-07-01")
+    with spark_jobs(spark) as jobs:
+        run_merge(spark, _DAILY_UPSERT.format(t="jb_fact", s="jb_src"))
+    assert 0 < jobs.n <= _STAGED_UPSERT_JOBS // 2, jobs.n
+    assert _part_files(spark, "jb_fact", "d=2022-07-01") == untouched
+    assert spark.table("jb_fact").count() == 2201
+    assert spark.sql("SELECT sum(n) AS s FROM jb_fact").first()["s"] == 800
+    spark.sql("DROP TABLE IF EXISTS jb_fact")
+
+    ledger = LoadLedger(spark, str(tmp_path / "ledger"))
+    with spark_jobs(spark) as jobs:
+        assert ledger.loaded_files("db.t") == set()
+        ledger.record("db.t", ["a.csv", "b.csv"], FROZEN)
+        assert ledger.loaded_files("db.t") == {"a.csv", "b.csv"}
+    assert jobs.n == 0
+
+
+def _table_snapshot(spark, table):
+    """partition dir -> {file name: bytes}, plus the table dir's other
+    entries (where a leftover ``.spark-staging-*`` dir would show)."""
+    import os
+
+    root = _table_dir(spark, table)
+    snap = {}
+    for entry in sorted(os.listdir(root)):
+        d = os.path.join(root, entry)
+        if os.path.isdir(d) and "=" in entry:
+            snap[entry] = {
+                f: open(os.path.join(d, f), "rb").read()
+                for f in _part_files(spark, table, entry)
+            }
+        else:
+            snap[entry] = None
+    return snap
+
+
+@pytest.mark.parametrize(
+    "src_rows, merge_tail, error",
+    [
+        # ANSI cast error inside the single INSERT OVERWRITE job
+        (
+            "(1, 'abc', DATE'2022-07-14'), (5000, 'new', DATE'2022-07-13')",
+            "WHEN MATCHED THEN UPDATE SET n = CAST(s.v AS INT) "
+            "WHEN NOT MATCHED THEN INSERT (id, v, n, d) VALUES (s.id, s.v, 0, s.d)",
+            "CAST_INVALID_INPUT",
+        ),
+        # duplicate source match, upsert
+        (
+            "(1, 'a', DATE'2022-07-14'), (1, 'b', DATE'2022-07-14')",
+            "WHEN MATCHED THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT (id, v, n, d) VALUES (s.id, s.v, 0, s.d)",
+            "nondeterministic MERGE",
+        ),
+        # duplicate source match, delete-only
+        (
+            "(2, 'a', DATE'2022-07-13'), (2, 'b', DATE'2022-07-13')",
+            "WHEN MATCHED THEN DELETE",
+            "nondeterministic MERGE",
+        ),
+    ],
+    ids=["ansi_cast", "dup_upsert", "dup_delete_only"],
+)
+def test_failed_pruned_merge_leaves_target_untouched(
+    spark, src_rows, merge_tail, error
+):
+    """A pruned MERGE that fails at runtime leaves every partition's files
+    byte-identical and leaves no staging dir, temp view or stage table."""
+    _daily_fact(spark, "fa_fact")
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW fa_src AS "
+        f"SELECT * FROM VALUES {src_rows} AS t(id, v, d)"
+    )
+    before = _table_snapshot(spark, "fa_fact")
+    with pytest.raises(Exception, match=error):
+        run_merge(
+            spark,
+            "MERGE INTO fa_fact AS t USING fa_src AS s "
+            f"ON t.id = s.id AND t.d = s.d {merge_tail}",
+        )
+    assert _table_snapshot(spark, "fa_fact") == before
+    assert not spark.catalog.tableExists("fa_fact__merge_stage")
+    assert [
+        v.name
+        for v in spark.catalog.listTables()
+        if v.name.startswith("__merge_")
+    ] == []
+    assert spark.table("fa_fact").count() == 1501
+    spark.sql("DROP TABLE IF EXISTS fa_fact")
